@@ -5,18 +5,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ops.WarpOps._
 import graft.ops.WarpOps.Order
-import graft.functions.{WarpAggregates => WA, WarpFunctions => WF}
+import graft.functions.{ExactSum, WarpAggregates => WA, WarpFunctions => WF}
+import graft.functions.WarpAggregates.{davg, dsum}
 import graft.sources.Sequencer
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with an equivalent DuckDB oracle in [[oracleSql]].
   *
-  * Float discipline: double sums are accumulated as decimal(28,6) and cast
-  * back to double, so Spark's partial-aggregation order and DuckDB's scan
-  * order produce bit-identical results (exact decimal addition is
-  * associative; the per-row double->decimal rounding is deterministic in
-  * both engines). Row-level double arithmetic (a*b etc.) is IEEE-identical
-  * everywhere and needs no care.
+  * Float discipline: double sums go through [[graft.functions.ExactSum]]
+  * (`dsum`/`davg` at 6 digits), so Spark's partial-aggregation order and
+  * DuckDB's `SUM(CAST(x AS DECIMAL(p,s)))` scan order produce
+  * bit-identical results (exact addition is associative; the per-row
+  * double->decimal rounding is deterministic in both engines). Row-level
+  * double arithmetic (a*b etc.) is IEEE-identical everywhere and needs no
+  * care.
   */
 object SparkEntry {
 
@@ -31,9 +33,6 @@ object SparkEntry {
       case None    => df
     }
   }
-
-  /** Order-insensitive exact double sum (see class doc). */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 6))).cast("double")
 
   /** Runs `body` with spark.sql.shuffle.partitions temporarily lowered for
     * the REAL-streaming catalog rows. A stateful streaming operator opens
@@ -71,9 +70,6 @@ object SparkEntry {
     s.conf.set(key, "false")
     try body finally s.conf.set(key, prev)
   }
-  /** Matching exact average: exact decimal sum, one double division. */
-  private def davg(c: Column): Column = (sum(c.cast(DecimalType(28, 6))).cast("double") / count(c))
-
   /** Deterministic duplicate-pair fixture for the connected-components
     * queries: doc i ~ doc i+1 whenever both exist and i % 10 < 9 — 10-node
     * chains, reproducible in SQL (no hash seeds involved). */
@@ -991,7 +987,7 @@ object SparkEntry {
       T(s, dir, "orders")
         .rankBy(Seq(col("o_custkey")), Seq(
           ("rn", w => row_number().over(w)),
-          ("running", w => sum(col("o_totalprice").cast(DecimalType(28, 6))).over(w).cast("double"))),
+          ("running", w => ExactSum(col("o_totalprice"), 6).over(w).cast("double"))),
           Seq(Order(col("o_orderkey"))))
         .selectColumns(Seq("o_orderkey", "o_custkey", "o_totalprice", "rn", "running"))
         .warpSort(Seq(Order(col("o_orderkey"))))
@@ -3615,8 +3611,7 @@ object SparkEntry {
           col("ts").cast(org.apache.spark.sql.types.TimestampType),
           3600L * 1000000,
           Seq("n_1h" -> (w => count(lit(1)).over(w)),
-            "sum_1h" -> (w => sum(col("value").cast(DecimalType(28, 6))).over(w)
-              .cast("double"))))
+            "sum_1h" -> (w => ExactSum(col("value"), 6).over(w).cast("double"))))
         .selectColumns(Seq("event_id", "user_id", "n_1h", "sum_1h"))
         .warpSort(Seq(Order(col("event_id"))))
     }),
@@ -3786,6 +3781,9 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      // single-use inputs: the memory-sink table below reads neither
+      Seq(tmp, tmpL).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       s.table(qname)
         .select(col("doc_id").as("new_id"), col("hist_id"), col("jaccard"))
         .orderBy("new_id", "hist_id")
@@ -5090,9 +5088,11 @@ object SparkEntry {
     * OUTPUT is DECIMAL(18,9) — the int64-backed tier — because
     * precision > 18 decimals are 128-bit-backed in both engines, the
     * repr class the driver hash convicted in r12 (HUGEINT) and r13
-    * (DECIMAL(20,9)); ratios are < 1e9 so 18 digits are exact. */
-  private def dec9Sql(num: String, den: String): String =
-    s"""CAST(CAST(CASE WHEN $den > 0
+    * (DECIMAL(20,9)); ratios are < 1e9 so 18 digits are exact. 0 unless
+    * `num >= 0` and `den > 0`, as on the Spark side: `//` floors where
+    * Spark's integral division truncates. */
+  private[graft] def dec9Sql(num: String, den: String): String =
+    s"""CAST(CAST(CASE WHEN ($num) >= 0 AND $den > 0
           THEN (CAST($num AS HUGEINT) * 2000000000 + $den) // (CAST($den AS HUGEINT) * 2)
           ELSE 0 END AS DECIMAL(20,0))
         * CAST(0.000000001 AS DECIMAL(10,9)) AS DECIMAL(18,9))"""
@@ -5102,9 +5102,10 @@ object SparkEntry {
     * every scale-9 DECIMAL output column is driver-hash red, int64- and
     * int128-backed alike; DOUBLE is the proven-green tier). The HUGEINT
     * e9 is exact, its DOUBLE cast is exact for e9 < 2^53, and `/ 1e9` is
-    * the identical correctly-rounded binary64 division Spark performs. */
-  private def dbl9Sql(num: String, den: String): String =
-    s"""CASE WHEN $den > 0
+    * the identical correctly-rounded binary64 division Spark performs.
+    * Same `num >= 0` gate as [[dec9Sql]]. */
+  private[graft] def dbl9Sql(num: String, den: String): String =
+    s"""CASE WHEN ($num) >= 0 AND $den > 0
           THEN CAST((CAST($num AS HUGEINT) * 2000000000 + $den) // (CAST($den AS HUGEINT) * 2) AS DOUBLE) / 1e9
           ELSE CAST(0 AS DOUBLE) END"""
 

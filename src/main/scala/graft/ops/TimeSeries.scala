@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.ExactSum
 
 /** Regular-grid resampling with forward fill — "one row per (key, step)
   * from each key's first event to its last, carrying the latest observed
@@ -204,7 +205,7 @@ object TimeSeries {
     seg.groupBy("key", "w")
       .agg(count(lit(1)).as("n_events"),
         (max(col("__us")) - min(col("__us"))).as("span_us"),
-        sum(mass).as("__num"))
+        ExactSum(mass, 0).as("__num"))
       .withColumn("twap",
         when(col("span_us") > 0,
           col("__num").cast("double")

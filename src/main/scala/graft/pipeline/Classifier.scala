@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.ExactSum
 
 /** Model-based quality filtering: a linear (logistic) classifier trained
   * WITH Spark aggregations and applied as a pure column expression — the
@@ -21,14 +22,15 @@ import org.apache.spark.sql.functions._
   *     codegen'd map pass with zero shuffle, oracle-checkable in any SQL
   *     engine (`q_classify_score`).
   *
-  * Determinism: each gradient addend is cast to DECIMAL(30,15) before the
-  * sum, making the per-iteration reduction EXACT and therefore independent
-  * of partial-aggregation order — two trainings on the same data produce
-  * byte-identical weights on any cluster size (pinned in ClassifierSpec).
-  * The decimal cast truncates each addend at 1e-15 — far below any
-  * gradient signal — and bounds: |err| < 1 and features are capped to
-  * [0, 1], so DECIMAL(30,15) can never overflow at any corpus size
-  * (10^15 rows of magnitude-1 addends fit in the 15 integer digits).
+  * Determinism: each gradient addend quantizes to 15 digits in an
+  * [[graft.functions.ExactSum]], making the per-iteration reduction EXACT
+  * and therefore independent of partial-aggregation order — two trainings
+  * on the same data produce byte-identical weights on any cluster size
+  * (pinned in ClassifierSpec). The quantization rounds each addend at
+  * 1e-15 — far below any gradient signal — and bounds: |err| < 1 and
+  * features are capped to [0, 1], so the sum can never overflow at any
+  * corpus size (10^23 rows of magnitude-1 addends fit its 23 integer
+  * digits).
   *
   * Reference analogue: the reference ships heuristic quality formulas only
   * (see TextAnalysis.qualityScore); a trainable filter is part of the
@@ -125,8 +127,8 @@ object Classifier {
         val errDf = data.select(col("__x"),
           (score(col("__x"), w.toSeq) - col("__y")).as("__e"))
         val aggs = (0 until dim).map(j =>
-          sum((col("__e") * element_at(col("__x"), j + 1)).cast("decimal(30,15)"))) :+
-          sum(col("__e").cast("decimal(30,15)"))
+          ExactSum(col("__e") * element_at(col("__x"), j + 1), 15)) :+
+          ExactSum(col("__e"), 15)
         val g = errDf.agg(aggs.head, aggs.tail: _*).head()
         for (j <- 0 to dim) {
           val gj = g.getDecimal(j).doubleValue() / n
@@ -195,8 +197,8 @@ object Classifier {
     ranked.agg(
         sum(col("__p")).as("__npos"),
         sum(col("__n") - col("__p")).as("__nneg"),
-        sum((col("__p") * (lit(2) * col("__below") + col("__n") + 1))
-          .cast("decimal(38,0)")).as("__r2"))
+        ExactSum(col("__p") * (lit(2) * col("__below") + col("__n") + 1), 0)
+          .as("__r2"))
       .select(col("__npos").as("npos"), col("__nneg").as("nneg"),
         when(col("__npos") > 0 && col("__nneg") > 0,
           round((col("__r2").cast("double")
@@ -224,8 +226,8 @@ object Classifier {
           .cast("int"))
       .groupBy("bin")
       .agg(sum(when(col("bin").isNotNull, 1L).otherwise(0L)).as("n"),
-        round(sum(when(col("bin").isNotNull, col("__s"))
-            .cast("decimal(30,15)")).cast("double")
+        round(ExactSum(when(col("bin").isNotNull, col("__s")), 15)
+            .cast("double")
           / sum(when(col("bin").isNotNull, 1L).otherwise(0L)), 9)
           .as("mean_score"),
         round(sum(when(col("bin").isNotNull, col("__y")).otherwise(0L))

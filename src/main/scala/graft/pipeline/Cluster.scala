@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.ExactSum
 
 /** Deterministic distributed k-means over an embedding column — semantic
   * clustering for corpus curation (topic balancing, per-cluster sampling
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.DecimalType
   *     ([[graft.functions.DotProductExpr]]) and `c2` a driver-side left
   *     fold over the centroid; ties break to the lowest cluster id
   *     (struct-min over `(dist, cluster)`);
-  *   - update: per-dimension means as EXACT DECIMAL(30,15) sums (the
+  *   - update: per-dimension means as EXACT 15-digit sums (the
   *     [[Classifier.trainLogistic]] recipe — addend-quantized, so the
   *     reduction is partial-aggregation-order independent) divided once
   *     in double on the driver; an emptied cluster keeps its previous
@@ -86,7 +86,7 @@ object Cluster {
         val sums = assign(base, cents)
           .select(col("__c"), posexplode(col("__v")).as(Seq("__i", "__x")))
           .groupBy("__c", "__i")
-          .agg(sum(col("__x").cast("double").cast(DecimalType(30, 15))).as("__s"),
+          .agg(ExactSum(col("__x").cast("double"), 15).as("__s"),
             count(lit(1)).as("__n"))
           .collect()
         val next = cents.map(_.clone())
@@ -110,7 +110,7 @@ object Cluster {
     kmeansAssign(df, vecCol, idCol, k, iters)
       .groupBy("cluster")
       .agg(count(lit(1)).as("n"),
-        round(sum(col("dist2").cast(DecimalType(30, 12))).cast("double") /
+        round(ExactSum(col("dist2"), 12).cast("double") /
           count(lit(1)), 6).as("mean_dist2"))
 
   /** Per-cluster medoid-lite: the member CLOSEST to its final centroid —
@@ -146,8 +146,8 @@ object Cluster {
     val cent = rows
       .select(posexplode(v).as(Seq("__d0", "__x")))
       .groupBy((col("__d0") + 1).as("__d"))
-      .agg((sum(col("__x").cast("double").cast(DecimalType(30, 15)))
-        .cast("double") / count(lit(1)).cast("double")).as("__mu"))
+      .agg((ExactSum(col("__x").cast("double"), 15).cast("double") /
+        count(lit(1)).cast("double")).as("__mu"))
       .orderBy("__d").collect().map(_.getDouble(1))
     require(cent.nonEmpty, "embeddingOutliers: empty input")
     val c2 = cent.foldLeft(0.0)((acc, x) => acc + x * x)
@@ -159,10 +159,10 @@ object Cluster {
     val dists = rows.select(col(idCol).as("__id"), d2.as("__d2"))
       .localCheckpoint(true)
     val st = dists.agg(
-        (sum(col("__d2").cast(DecimalType(30, 15))).cast("double")
+        (ExactSum(col("__d2"), 15).cast("double")
           / count(lit(1)).cast("double")).as("__m"),
-        (sum((col("__d2") * col("__d2")).cast(DecimalType(30, 15)))
-          .cast("double") / count(lit(1)).cast("double")).as("__m2"))
+        (ExactSum(col("__d2") * col("__d2"), 15).cast("double")
+          / count(lit(1)).cast("double")).as("__m2"))
       .head()
     val mu = st.getDouble(0)
     val variance = st.getDouble(1) - mu * mu
@@ -204,7 +204,7 @@ object Cluster {
 
   /** Per-group embedding centroids: one row per `groupCol` value with the
     * group size and its mean vector, means computed with the
-    * [[kmeansAssign]] decimal recipe (per-dimension DECIMAL(30,15) sums,
+    * [[kmeansAssign]] decimal recipe (per-dimension exact 15-digit sums,
     * one double division) so the result is partial-aggregation-order
     * independent and externally replayable. Null groups and null vectors
     * are dropped. Scale shape: one posexplode + map-side-combined
@@ -215,7 +215,7 @@ object Cluster {
       .select(col(groupCol).as("__g"),
         posexplode(col(vecCol)).as(Seq("__i", "__x")))
       .groupBy("__g", "__i")
-      .agg(sum(col("__x").cast("double").cast(DecimalType(30, 15))).as("__s"),
+      .agg(ExactSum(col("__x").cast("double"), 15).as("__s"),
         count(lit(1)).as("__n"))
     sums.groupBy("__g")
       .agg(max(col("__n")).as("n"),
@@ -259,8 +259,8 @@ object Cluster {
     * (floor(x_i·x_j·2^30) — the scaling by a power of two is exact in
     * IEEE doubles, the floor is engine-portable) and summed as integers,
     * so the per-pair sums are exact, partition-order-invariant, and
-    * replayable in any SQL engine; per-dimension sums accumulate as
-    * DECIMAL(30,15) (the dsum recipe). Covariance = (Sxy − Sx·Sy/n)/n in
+    * replayable in any SQL engine; per-dimension sums are exact at
+    * 15 digits ([[ExactSum]]). Covariance = (Sxy − Sx·Sy/n)/n in
     * doubles rounded to 9; correlation guarded NULL at zero variance.
     *
     * Scale shape: ONE per-partition accumulation pass for the pair sums —
@@ -321,7 +321,7 @@ object Cluster {
     }.toDF("__i", "__j", "__p")
     val pairs = partials
       .groupBy(col("__i"), col("__j"))
-      .agg((sum(col("__p").cast(DecimalType(38, 0))).cast("double")
+      .agg((ExactSum(col("__p"), 0).cast("double")
         / 1073741824.0).as("__sxy"))
     // variances derive from the SAME per-dimension aggregate (Sx, Sxx, n)
     // rather than the covariance diagonal — a diagonal self-join would
@@ -329,10 +329,9 @@ object Cluster {
     val dims = rows
       .select(posexplode(v).as(Seq("__d0", "__x")))
       .groupBy((col("__d0") + 1).as("__d"))
-      .agg(sum(col("__x").cast("double").cast(DecimalType(30, 15)))
-          .cast("double").as("__sx"),
-        sum((col("__x").cast("double") * col("__x").cast("double"))
-          .cast(DecimalType(30, 15))).cast("double").as("__sxx"),
+      .agg(ExactSum(col("__x").cast("double"), 15).cast("double").as("__sx"),
+        ExactSum(col("__x").cast("double") * col("__x").cast("double"), 15)
+          .cast("double").as("__sxx"),
         count(lit(1)).as("__n"))
       .withColumn("__var",
         (col("__sxx") - col("__sx") * col("__sx") / col("__n")) / col("__n"))
@@ -464,10 +463,8 @@ object Cluster {
         col("__x0").cast("double").as("__x"))
     val stats = long
       .groupBy(col("__d").as("__ds"))
-      .agg(sum(col("__x").cast(DecimalType(30, 15)))
-          .cast("double").as("__sx"),
-        sum((col("__x") * col("__x")).cast(DecimalType(30, 15)))
-          .cast("double").as("__sxx"),
+      .agg(ExactSum(col("__x"), 15).cast("double").as("__sx"),
+        ExactSum(col("__x") * col("__x"), 15).cast("double").as("__sxx"),
         count(lit(1)).as("__n"))
       .select(col("__ds"), (col("__sx") / col("__n")).as("__mu"),
         ((col("__sxx") - col("__sx") * col("__sx") / col("__n"))

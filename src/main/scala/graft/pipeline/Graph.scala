@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.ExactSum
 
 /** Iterative graph analytics over edge tables. Connected components (the
   * dedup-cluster machinery) lives in [[Dedup.connectedComponents]]; this
@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.DecimalType
   * sampling (the classic web-graph quality prior).
   *
   * Like [[Cluster]] and [[Classifier]], the iteration is DETERMINISTIC
-  * and externally replayable: per-edge contributions quantize to
-  * DECIMAL(30,15) before the per-node sum (partial-aggregation-order
-  * independent), the two scalar terms each round (uniform base, dangling
-  * redistribution) are single double operations on the driver, and the
+  * and externally replayable: per-edge contributions quantize to 15
+  * digits in an [[graft.functions.ExactSum]] per-node sum
+  * (partial-aggregation-order independent), the two scalar terms each
+  * round (uniform base, dangling redistribution) are single double
+  * operations on the driver, and the
   * `q_pagerank` DuckDB oracle unrolls the same rounds and hash-matches.
   *
   * Scale shape (100 TB of edges): each round is ONE join of the edge
@@ -49,8 +50,8 @@ object Graph {
     * `dstSalt` > 1 splits the per-destination contribution sum into a
     * salted two-phase aggregate (partial decimal sums per
     * (dst, hash(src) % dstSalt), then the final per-dst sum) — the skew
-    * remedy when hub destinations concentrate the shuffle. The
-    * DECIMAL(30,15) contribution sum is associative, so any salt width
+    * remedy when hub destinations concentrate the shuffle. The exact
+    * 15-digit contribution sum is associative, so any salt width
     * produces BIT-IDENTICAL ranks (pinned in PipelineSpec on a power-law
     * graph); the default 1 keeps the single-phase plan whose map-side
     * combine already handles moderate skew. */
@@ -86,27 +87,7 @@ object Graph {
       // no per-round sort of the edges. Scale-safe: the build side is one
       // partition's slice of the node-rank table, the standard SHJ shape.
       for (_ <- 1 to iters) {
-        val withDeg = pr.join(deg.hint("SHUFFLE_HASH"),
-            pr("__n") === deg("__src"), "left")
-          .select(col("__n"), col("__pr"), col("__deg"))
-        // dangling mass: exact decimal sum -> ONE broadcast row riding the
-        // same job as the rank projection (no separate driver action)
-        val dang = withDeg.filter(col("__deg").isNull)
-          .agg(sum(col("__pr").cast(DecimalType(30, 15))).as("__dang"))
-        val quant = e.join(
-            withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
-            col("__src") === col("__n"))
-          .select(col("__dst"), col("__src"),
-            (col("__pr") / col("__deg").cast("double"))
-              .cast(DecimalType(30, 15)).as("__c"))
-        val contrib =
-          if (dstSalt <= 1)
-            quant.groupBy("__dst").agg(sum(col("__c")).as("__in"))
-          else // salted two-phase: exact (decimal sum is associative)
-            quant
-              .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
-              .agg(sum(col("__c")).as("__part"))
-              .groupBy("__dst").agg(sum(col("__part")).as("__in"))
+        val (contrib, dang) = rankFlow(pr, e, deg, dstSalt)
         val base = (1.0 - damping) / n.toDouble
         val next = nodes.join(contrib.hint("SHUFFLE_HASH"),
             nodes("__n") === contrib("__dst"), "left")
@@ -124,6 +105,30 @@ object Graph {
     } finally { e.unpersist(); nodes.unpersist(); deg.unpersist(); () }
   }
 
+  /** One rank-propagation round's exact 15-digit sums over the rank
+    * table `pr` (`__n`, `__pr`): the per-destination incoming mass `__in`
+    * (salted two-phase when `dstSalt` > 1) and the 1-row dangling mass
+    * `__dang` of nodes without out-edges, which rides the same job as the
+    * rank projection as a broadcast row (no separate driver action). */
+  private def rankFlow(pr: DataFrame, e: DataFrame, deg: DataFrame,
+                       dstSalt: Int): (DataFrame, DataFrame) = {
+    val withDeg = pr.join(deg.hint("SHUFFLE_HASH"), pr("__n") === deg("__src"), "left")
+      .select(col("__n"), col("__pr"), col("__deg"))
+    val dang = withDeg.filter(col("__deg").isNull)
+      .agg(ExactSum(col("__pr"), 15).as("__dang"))
+    val quant = e.join(withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
+        col("__src") === col("__n"))
+      .select(col("__dst"), col("__src"),
+        (col("__pr") / col("__deg").cast("double")).as("__c"))
+    val contrib =
+      if (dstSalt <= 1) quant.groupBy("__dst").agg(ExactSum(col("__c"), 15).as("__in"))
+      else // salted two-phase: exact (the sum is associative)
+        quant.groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
+          .agg(ExactSum(col("__c"), 15).as("__part"))
+          .groupBy("__dst").agg(ExactSum(col("__part"), 15).as("__in"))
+    (contrib, dang)
+  }
+
   /** PERSONALIZED PageRank: random-walk-with-restart importance relative
     * to a seed set — the "what matters near THESE nodes" ranking
     * (seed-relative content importance, related-entity retrieval,
@@ -137,7 +142,7 @@ object Graph {
     * where tele(v) = 1/|seeds| on seeds, 0 elsewhere; dangling mass
     * restarts at the seeds like every other walk. Seeds not appearing in
     * the edge set still join the node universe (they hold their teleport
-    * mass). Contributions quantize to DECIMAL(30,15) exactly as
+    * mass). Contributions quantize to 15 digits exactly as
     * [[pageRank]]'s, so salting stays bit-identical and the unrolled
     * DuckDB oracle replays the rounds. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -171,25 +176,7 @@ object Graph {
         // SHUFFLE_HASH hints: same rationale as [[pageRank]] — checkpoint
         // scans have no stats, SMJ would re-sort the edge table per round
         for (_ <- 1 to iters) {
-          val withDeg = pr.join(deg.hint("SHUFFLE_HASH"),
-              pr("__n") === deg("__src"), "left")
-            .select(col("__n"), col("__pr"), col("__deg"))
-          val dang = withDeg.filter(col("__deg").isNull)
-            .agg(sum(col("__pr").cast(DecimalType(30, 15))).as("__dang"))
-          val quant = e.join(
-              withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
-              col("__src") === col("__n"))
-            .select(col("__dst"), col("__src"),
-              (col("__pr") / col("__deg").cast("double"))
-                .cast(DecimalType(30, 15)).as("__c"))
-          val contrib =
-            if (dstSalt <= 1)
-              quant.groupBy("__dst").agg(sum(col("__c")).as("__in"))
-            else
-              quant
-                .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
-                .agg(sum(col("__c")).as("__part"))
-                .groupBy("__dst").agg(sum(col("__part")).as("__in"))
+          val (contrib, dang) = rankFlow(pr, e, deg, dstSalt)
           val next = tele.join(contrib.hint("SHUFFLE_HASH"),
               tele("__n") === contrib("__dst"), "left")
             .crossJoin(broadcast(dang))
@@ -216,7 +203,7 @@ object Graph {
     * Unlabeled nodes start at `prior`.
     *
     * Deterministic and replayable like [[pageRank]]: per-edge
-    * contributions quantize to DECIMAL(30,15) before the per-node sum, so
+    * contributions quantize to 15 digits before the per-node sum, so
     * partial-aggregation order cannot perturb the result and the
     * `q_label_prop` DuckDB oracle unrolls the same rounds bit-for-bit.
     *
@@ -251,17 +238,17 @@ object Graph {
       for (_ <- 1 to iters) {
         val quant = e.join(sc.hint("SHUFFLE_HASH"), col("__src") === col("__n"))
           .select(col("__dst"), col("__src"),
-            col("__s").cast(DecimalType(30, 15)).as("__c"))
+            col("__s").as("__c"))
         val in =
           if (dstSalt <= 1)
             quant.groupBy("__dst")
-              .agg(sum(col("__c")).as("__sum"), count(lit(1)).as("__cnt"))
+              .agg(ExactSum(col("__c"), 15).as("__sum"), count(lit(1)).as("__cnt"))
           else // salted two-phase: exact (sum and count are associative)
             quant
               .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
-              .agg(sum(col("__c")).as("__ps"), count(lit(1)).as("__pc"))
+              .agg(ExactSum(col("__c"), 15).as("__ps"), count(lit(1)).as("__pc"))
               .groupBy("__dst")
-              .agg(sum(col("__ps")).as("__sum"), sum(col("__pc")).as("__cnt"))
+              .agg(ExactSum(col("__ps"), 15).as("__sum"), sum(col("__pc")).as("__cnt"))
         val next = sc.join(in.hint("SHUFFLE_HASH"), sc("__n") === in("__dst"), "left")
           .select(col("__n"), col("__seed"),
             when(col("__seed").isNotNull, col("__seed"))

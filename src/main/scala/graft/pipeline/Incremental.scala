@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.ExactSum
 
 /** Incremental aggregate-view maintenance: keep a grouped aggregate
   * (counts + exact decimal sums) up to date from insert/delete deltas
@@ -28,7 +29,7 @@ object Incremental {
   def aggState(df: DataFrame, keyCols: Seq[String],
                valCols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("cnt") +:
-      valCols.map(v => sum(col(s"`$v`").cast(Dec)).cast(Dec).as(s"sum_$v"))
+      valCols.map(v => ExactSum(col(s"`$v`"), 6).cast(Dec).as(s"sum_$v"))
     df.groupBy(keyCols.map(c => col(s"`$c`")): _*).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -42,11 +43,11 @@ object Incremental {
     val w = col(s"`$weightCol`").cast("long")
     val dAggs = sum(w).as("cnt") +:
       valCols.map(v =>
-        sum(col(s"`$v`").cast(Dec) * w.cast(Dec)).cast(Dec).as(s"sum_$v"))
+        ExactSum(col(s"`$v`").cast(Dec) * w, 6).cast(Dec).as(s"sum_$v"))
     val d = delta.groupBy(keyCols.map(c => col(s"`$c`")): _*)
       .agg(dAggs.head, dAggs.tail: _*)
     val mAggs = sum(col("cnt")).as("cnt") +:
-      valCols.map(v => sum(col(s"sum_$v")).cast(Dec).as(s"sum_$v"))
+      valCols.map(v => ExactSum(col(s"sum_$v"), 6).cast(Dec).as(s"sum_$v"))
     state.unionByName(d)
       .groupBy(keyCols.map(c => col(s"`$c`")): _*)
       .agg(mAggs.head, mAggs.tail: _*)

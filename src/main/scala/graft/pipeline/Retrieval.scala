@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.ExactSum
 
 /** Lexical retrieval + chunking for training-data pipelines: BM25 scoring
   * against a keyword query (in-domain selection, eval-leak triage, "find
@@ -85,7 +86,7 @@ object Retrieval {
     * score(d) = Σ over runs of 1/(k0 + rank_run(d)), over any number of
     * ranked retrieval runs — BM25, vector top-k, ... Each input is
     * (frame, idCol, scoreCol) with higher-better scores; runs rank by
-    * (score DESC, id ASC), each reciprocal quantizes to DECIMAL(30,15)
+    * (score DESC, id ASC), each reciprocal quantizes to 15 digits
     * before the cross-run sum (aggregation-order independent, so the
     * `q_hybrid_search` oracle replays the fusion bit-for-bit), and the
     * top `topK` fused ids return with the score and how many runs
@@ -117,11 +118,11 @@ object Retrieval {
           col(scoreCol).cast("double").as("__s"))
         .withColumn("__r", row_number().over(w))
         .select(col("id"),
-          (lit(1.0) / (lit(k0.toDouble) + col("__r").cast("double")))
-            .cast(DecimalType(30, 15)).as("__c"))
+          (lit(1.0) / (lit(k0.toDouble) + col("__r").cast("double"))).as("__c"))
     }.reduce(_.unionByName(_))
     ranked.groupBy("id")
-      .agg(sum(col("__c")).cast("double").as("rrf"), count(lit(1)).as("runs_hit"))
+      .agg(ExactSum(col("__c"), 15).cast("double").as("rrf"),
+        count(lit(1)).as("runs_hit"))
       .orderBy(col("rrf").desc, col("id"))
       .limit(topK)
   }
@@ -178,8 +179,8 @@ object Retrieval {
     val hits = ranked.join(ex, Seq("__q", "__i"), "left_semi")
       .groupBy("__q")
       .agg(min(col("__rn")).as("__minrn"),
-        sum(element_at(typedLit(disc), col("__rn"))
-          .cast(DecimalType(28, 12))).cast("double").as("__dcg"))
+        ExactSum(element_at(typedLit(disc), col("__rn")), 12)
+          .cast("double").as("__dcg"))
     val tot = ex.groupBy("__q").agg(count(lit(1)).as("total"))
     tot.join(hits, Seq("__q"), "left")
       .select(col("__q").as(qidCol), col("total"),

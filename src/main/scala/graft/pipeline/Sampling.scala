@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.ExactSum
 
 /** Deterministic sampling / splitting for training-data pipelines.
   *
@@ -127,8 +128,7 @@ object Sampling {
                 else org.apache.spark.sql.functions.pow(col("__n").cast("double"), alpha)
     val weights = counts.select(col("__cls"), col("__n"), wExpr.as("__w"))
     val tot = weights.agg(
-      sum(col("__w").cast(org.apache.spark.sql.types.DecimalType(28, 6)))
-        .cast("double").as("__wsum"),
+      ExactSum(col("__w"), 6).cast("double").as("__wsum"),
       sum(col("__n")).as("__ntot"))
     val targets = weights.crossJoin(broadcast(tot))
       .select(col("__cls"),
@@ -374,7 +374,7 @@ object Sampling {
         (col("__docs").cast("double") / col("__t_docs").cast("double")) *
           exp(lit(eta) * col("excess")))
     val norm = withF.agg(
-      sum(col("factor").cast("decimal(28,15)")).as("__z"))
+      ExactSum(col("factor"), 15).as("__z"))
     withF.crossJoin(broadcast(norm))
       .withColumn("weight",
         round(col("factor").cast("decimal(28,15)") / col("__z"), 9)
@@ -447,7 +447,6 @@ object Sampling {
     require(relErr > 0 && z > 0 && pilotN > 0,
       s"need relErr, z, pilotN > 0; got $relErr/$z/$pilotN")
     val spark = df.sparkSession
-    import org.apache.spark.sql.types.DecimalType
     val total = df.count()
     require(total > 0, "cannot adaptively sample an empty frame")
     def cutFor(n: Long): Long =
@@ -456,8 +455,8 @@ object Sampling {
     def statsBelow(cut: Long) = df
       .filter(hashU32(col(idCol)) < cut)
       .agg(count(x).as("n"),
-        sum(x.cast(DecimalType(30, 15))).cast("double").as("s"),
-        sum((x * x).cast(DecimalType(30, 15))).cast("double").as("sq"))
+        ExactSum(x, 15).cast("double").as("s"),
+        ExactSum(x * x, 15).cast("double").as("sq"))
       .head()
     val cutP = cutFor(pilotN)
     val p = statsBelow(cutP)

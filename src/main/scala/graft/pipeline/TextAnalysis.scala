@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.ExactSum
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting.
@@ -134,14 +135,16 @@ object TextAnalysis {
 
   /** The shared integer core of [[ratioDecimal9]]/[[ratioDouble9]]: the
     * 9-decimal ratio as a plain LONG of scaled units (round-half-up of
-    * `num/den * 1e9` in integer arithmetic; 0 when `den <= 0`). */
+    * `num/den * 1e9` in integer arithmetic). 0 unless `num >= 0` and
+    * `den > 0`: Spark's integral division truncates toward zero where the
+    * DuckDB twin's `//` floors, so only non-negative operands agree. */
   private def ratioE9(num: Column, den: Column): Column = {
     import org.apache.spark.sql.GraftColumnAccess.{column => C, expression => E}
     import org.apache.spark.sql.catalyst.expressions.IntegralDivide
     import org.apache.spark.sql.types.DecimalType
     val n38 = num.cast(DecimalType(38, 0))
     val d38 = den.cast(DecimalType(38, 0))
-    when(den > 0,
+    when(num >= 0 && den > 0,
       C(IntegralDivide(E(n38 * lit(2000000000L) + d38), E(d38 * lit(2L)))))
       .otherwise(lit(0L))
   }
@@ -305,8 +308,8 @@ object TextAnalysis {
     * exactly that mass) — self-trained scoring has no unseen tokens.
     *
     * Determinism across engines: per-token `-ln(count/total)` is rounded
-    * into a DECIMAL(28,12) before summation, so the per-document sum is
-    * EXACT (no float summation-order drift — the dsum recipe), and the
+    * to 12 digits in an [[ExactSum]], so the per-document sum is EXACT
+    * (no float summation-order drift), and the
     * final mean is rounded to 6 decimals, orders of magnitude coarser
     * than the ~1-ulp cross-engine `ln` disagreement the decimal carries.
     *
@@ -319,17 +322,15 @@ object TextAnalysis {
   def lmScore(df: DataFrame, idCol: String, textCol: String,
               trainOn: Option[DataFrame] = None,
               out: String = "nll"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     def toks(d: DataFrame) = d.select(col(idCol), explode(tokens(col(textCol))).as("__tok"))
     val counts = toks(trainOn.getOrElse(df))
       .groupBy("__tok").agg(count(lit(1)).as("__c"))
     val total = counts.agg(sum(col("__c")).as("__t"))
-    val nllTok = (-log(col("__c").cast("double") / col("__t")))
-      .cast(DecimalType(28, 12))
+    val nllTok = -log(col("__c").cast("double") / col("__t"))
     toks(df).join(counts, Seq("__tok"))
       .crossJoin(broadcast(total))
       .groupBy(idCol)
-      .agg(round(sum(nllTok).cast("double") / count(lit(1)), 6).as(out))
+      .agg(round(ExactSum(nllTok, 12).cast("double") / count(lit(1)), 6).as(out))
   }
 
   /** CCNet-style perplexity bucketing: score every document with the
@@ -381,9 +382,9 @@ object TextAnalysis {
     * smoothed floor `k/(k·V)` — finite, never minus-infinity.
     *
     * Determinism across engines: the [[lmScore]] recipe — each bigram's
-    * `-ln P` rounds into DECIMAL(28,12) before the exact per-document
-    * sum; the final mean rounds to 6 decimals, far coarser than the
-    * ~1-ulp cross-engine `ln` drift.
+    * `-ln P` rounds to 12 digits in the exact per-document sum; the
+    * final mean rounds to 6 decimals, far coarser than the ~1-ulp
+    * cross-engine `ln` drift.
     *
     * Plan shape: bigrams derive from the token ARRAY by zipping it with
     * its own shift — no per-document window, no second shuffle; then one
@@ -394,7 +395,6 @@ object TextAnalysis {
   def lmScoreBigram(df: DataFrame, idCol: String, textCol: String,
                     trainOn: Option[DataFrame] = None, addK: Double = 0.5,
                     out: String = "nll2"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(addK > 0, s"addK must be > 0, got $addK")
     def bigrams(d: DataFrame) = {
       val ws = tokens(col(textCol))
@@ -411,13 +411,13 @@ object TextAnalysis {
     val vocab = train.agg(count_distinct(col("__cur")).as("__v"))
     val p = (coalesce(col("__c2"), lit(0L)).cast("double") + lit(addK)) /
       (coalesce(col("__c1"), lit(0L)).cast("double") + lit(addK) * col("__v").cast("double"))
-    val nllTok = (-log(p)).cast(DecimalType(28, 12))
+    val nllTok = -log(p)
     bigrams(df)
       .join(c2, Seq("__prev", "__cur"), "left")
       .join(c1, Seq("__prev"), "left")
       .crossJoin(broadcast(vocab))
       .groupBy(idCol)
-      .agg(round(sum(nllTok).cast("double") / count(lit(1)), 6).as(out))
+      .agg(round(ExactSum(nllTok, 12).cast("double") / count(lit(1)), 6).as(out))
   }
 
   /** DSIR-style importance weight (Xie et al. 2023, "Data Selection for
@@ -434,7 +434,7 @@ object TextAnalysis {
     * well-defined for every corpus token).
     *
     * Determinism across engines: the [[lmScore]] recipe — each token's
-    * log-ratio rounds into DECIMAL(28,12) before the exact sum; the final
+    * log-ratio rounds to 12 digits in the exact sum; the final
     * mean rounds to 6 decimals, far coarser than cross-engine `ln` ulp
     * drift.
     *
@@ -446,7 +446,6 @@ object TextAnalysis {
   def importanceWeight(df: DataFrame, idCol: String, textCol: String,
                        target: DataFrame, targetTextCol: String,
                        out: String = "logratio"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     def tokCounts(d: DataFrame, tc: String, as: String) =
       d.select(explode(tokens(col(tc))).as("__tok"))
         .groupBy("__tok").agg(count(lit(1)).as(as))
@@ -459,12 +458,11 @@ object TextAnalysis {
     val ratioTok =
       (log((coalesce(col("__ct"), lit(0L)).cast("double") + 1.0) / (col("__tt") + col("__v")))
         - log((coalesce(col("__cc"), lit(0L)).cast("double") + 1.0) / (col("__tc") + col("__v"))))
-        .cast(DecimalType(28, 12))
     df.select(col(idCol), explode(tokens(col(textCol))).as("__tok"))
       .join(vocab, Seq("__tok"))
       .crossJoin(broadcast(sizes))
       .groupBy(idCol)
-      .agg(round(sum(ratioTok).cast("double") / count(lit(1)), 6).as(out))
+      .agg(round(ExactSum(ratioTok, 12).cast("double") / count(lit(1)), 6).as(out))
   }
 
   /** Top-`k` salient terms per document, ranked by term frequency over
@@ -573,8 +571,8 @@ object TextAnalysis {
     * a group matching the corpus distribution exactly; every group token
     * is corpus-supported by construction, so no zero-denominator terms.
     *
-    * Determinism: each addend `p_g·ln ratio` rounds into DECIMAL(28,12)
-    * before the per-group sum (the dsum recipe — exact, order-invariant),
+    * Determinism: each addend `p_g·ln ratio` rounds to 12 digits in the
+    * per-group [[ExactSum]] (exact, order-invariant),
     * and the reported divergence rounds to 6 decimals, far coarser than
     * cross-engine `ln` ulp drift.
     *
@@ -584,7 +582,6 @@ object TextAnalysis {
     * broadcast. The only corpus-sized pass is the explode itself. */
   def sourceDivergence(df: DataFrame, groupCol: String, textCol: String,
                        out: String = "kl"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val gt = df.select(col(groupCol).as("__g"),
         explode(tokens(col(textCol))).as("__tok"))
       .filter(length(col("__tok")) > 0)
@@ -599,13 +596,13 @@ object TextAnalysis {
     // factors pass ~3e9 (count × corpus-total at real corpus sizes)
     val ratio = (col("__cg").cast("double") * col("__nc").cast("double")) /
       (col("__cc").cast("double") * col("__ng").cast("double"))
-    val addend = (pg * log(ratio)).cast(DecimalType(28, 12))
+    val addend = pg * log(ratio)
     gt.join(corpus, Seq("__tok"))
       .join(broadcast(gTotals), Seq("__g"))
       .crossJoin(broadcast(cTotal))
       .groupBy(col("__g").as(groupCol))
       .agg(first(col("__ng")).as("n_tokens"), first(col("__vg")).as("vocab"),
-        round(sum(addend).cast("double"), 6).as(out))
+        round(ExactSum(addend, 12).cast("double"), 6).as(out))
   }
 
   def removeBoilerplateLines(df: DataFrame, idCol: String, textCol: String,

@@ -240,33 +240,105 @@ class FunctionsSpec extends SparkSpec {
     assert(math.abs(inD.getDouble(0) - 10.0) < 1e-9)
   }
 
-  test("SumProduct128 moments are bit-identical to the decimal formulation") {
-    // r15 (VERDICT r14 item 3): the two-long 128-bit accumulator must
-    // reproduce sum(cast(x as DECIMAL(18,6)) * cast(y as DECIMAL(18,6)))
-    // cast double BIT-exactly — negatives, fractions, half-up quantization
-    // edges, nulls, many groups (exercising merge paths) included
+  test("ExactSum is bit-identical to the inline decimal sum") {
+    // the reference is the inline form ExactSum replaced at every site:
+    // sum(cast(x AS DECIMAL(p,s))) and, for two factors,
+    // sum(cast(x AS DECIMAL(18,a)) * cast(y AS DECIMAL(18,b))) — compared
+    // as DECIMAL values (value AND scale), at every scale in use, over 13
+    // partitions (partial + merge paths), with negatives, nulls and
+    // half-up quantization edges
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
+    import graft.functions.ExactSum
     val rnd = new scala.util.Random(7)
-    val pts = Seq.tabulate(4000) { i =>
-      val x = (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(9))
-      val y = (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(9))
-      (i % 7, x, y)
-    } ++ Seq((0, 0.0000005, 1.0), (1, -0.0000005, 1.0), // half-up edges
-      (2, 123.4567895, -0.1234565))
-    val df = pts.toDF("g", "x", "y").repartition(13)
-    val D2 = DecimalType(18, 6)
-    def decRef(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      sum(a.cast(D2) * b.cast(D2)).cast("double")
-    val rows = df.groupBy("g").agg(
-      WA.warpCorr(col("x"), col("y")).as("c"),
-      WA.warpSlope(col("x"), col("y")).as("sl"),
-      WA.warpIntercept(col("x"), col("y")).as("ic"),
-      WA.warpCovarSample(col("x"), col("y")).as("cv"),
-      // the inline decimal reference, same closed forms
-      count(col("x")).cast("double").as("n"),
-      WA.dsum(col("x")).as("sx"), WA.dsum(col("y")).as("sy"),
-      decRef(col("x"), col("x")).as("sxx"),
-      decRef(col("x"), col("y")).as("sxy")).collect()
+    def v = (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(9))
+    val some = Seq.tabulate(4000) { i =>
+      (i % 7, i, Option(v).filter(_ => i % 11 != 0),
+        Option(v).filter(_ => i % 13 != 0))
+    }
+    val edges = Seq(0.5, 5e-7, 5e-13, 5e-16, 2.5e-6, 123.4567895)
+      .flatMap(e => Seq(e, -e)).zipWithIndex.map { case (e, i) =>
+        (i % 7, 4000 + i, Option(e), Option(-0.1234565))
+      }
+    val allNull = Seq((7, 5000, Option.empty[Double], Option.empty[Double]),
+      (7, 5001, None, Some(1.0)))
+    val df = (some ++ edges ++ allNull).toDF("g", "i", "x", "y").repartition(13)
+    val x = col("x"); val y = col("y")
+    // scale -> (one-factor reference precision, two-factor factor scales)
+    val scales = Seq(0 -> (38, (0, 0)), 6 -> (28, (3, 3)),
+      12 -> (28, (6, 6)), 15 -> (30, (6, 9)))
+    val pairs: Seq[(Column, Column)] = scales.flatMap { case (s, (p, (a, b))) =>
+      Seq(ExactSum(x, s) -> sum(x.cast(DecimalType(p, s))),
+        ExactSum.product(x, a, y, b) ->
+          sum(x.cast(DecimalType(18, a)) * y.cast(DecimalType(18, b))))
+    }
+    def sameDecimals(rows: Array[org.apache.spark.sql.Row], from: Int) =
+      rows.foreach { r =>
+        pairs.indices.foreach { k =>
+          val (got, want) = (r.get(from + 2 * k), r.get(from + 2 * k + 1))
+          assert(got == want, s"pair $k in $r") // BigDecimal: value + scale
+        }
+      }
+    val aggs = pairs.flatMap { case (a, b) => Seq(a, b) }
+    val grouped = df.groupBy("g").agg(aggs.head, aggs.tail: _*).collect()
+    assert(grouped.length == 8)
+    sameDecimals(grouped, 1)
+    // all-null and empty groups are NULL, never 0
+    val g7 = grouped.find(_.getInt(0) == 7).get
+    assert((1 to aggs.length).forall(g7.isNullAt))
+    val empty = df.filter(lit(false)).agg(aggs.head, aggs.tail: _*).collect()
+    assert((0 until aggs.length).forall(empty.head.isNullAt))
+    // window frames: a running sum and a sliding rows frame
+    val wRun = Window.partitionBy("g").orderBy("i")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wSlide = Window.partitionBy("g").orderBy("i").rowsBetween(-2, 0)
+    val windowed = df.select(
+      ExactSum(x, 6).over(wRun), sum(x.cast(DecimalType(28, 6))).over(wRun),
+      ExactSum(x, 15).over(wSlide), sum(x.cast(DecimalType(30, 15))).over(wSlide))
+      .collect()
+    windowed.foreach(r => assert(r.get(0) == r.get(1) && r.get(2) == r.get(3), r))
+
+    // the DECIMAL(38,s) bound: an unscaled sum of 10^38-1 is exact, 10^38
+    // is NULL (the reference is try_sum, which NULLs where ANSI sum throws)
+    val half = java.math.BigInteger.TEN.pow(37).multiply(java.math.BigInteger.valueOf(5))
+    def dec(u: java.math.BigInteger, s: Int) = new java.math.BigDecimal(u, s).toPlainString
+    for (s <- Seq(0, 15)) {
+      val bound = Seq(("below", dec(half.subtract(java.math.BigInteger.ONE), s)),
+        ("below", dec(half, s)), ("at", dec(half, s)), ("at", dec(half, s)),
+        ("neg", dec(half.negate, s)), ("neg", dec(half.negate, s)))
+        .toDF("k", "v").repartition(2)
+      val b = bound.groupBy("k").agg(ExactSum(col("v"), s).as("got"),
+        try_sum(col("v").cast(DecimalType(38, s))).as("want"))
+        .collect().map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
+      assert(b("below")._1 == b("below")._2 &&
+        b("below")._1 == new java.math.BigDecimal(
+          java.math.BigInteger.TEN.pow(38).subtract(java.math.BigInteger.ONE), s))
+      assert(b("at") == ((null, null)) && b("neg") == ((null, null)), b)
+    }
+    // two factors: 10^4 products of 10^34, one of them 1 short
+    val e17 = 100000000000000000L
+    val prods = (Seq.fill(9999)(("below", e17, e17)) :+ (("below", e17 - 1, e17 + 1))) ++
+      Seq.fill(10000)(("at", e17, e17))
+    val pb = prods.toDF("k", "a", "b").repartition(13).groupBy("k")
+      .agg(ExactSum.product(col("a"), 0, col("b"), 0),
+        try_sum(col("a").cast(DecimalType(18, 0)) * col("b").cast(DecimalType(18, 0))))
+      .collect().map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
+    assert(pb("below")._1 == pb("below")._2 && pb("below")._1 != null)
+    assert(pb("at") == ((null, null)), pb)
+
+    // the bivariate closed forms over ExactSum moments equal the same
+    // closed forms over the inline decimal moments, bit for bit
+    def decRef(a: Column, b: Column) =
+      sum(a.cast(DecimalType(18, 6)) * b.cast(DecimalType(18, 6))).cast("double")
+    val pairsOnly = df.filter(x.isNotNull && y.isNotNull)
+    val rows = pairsOnly.groupBy("g").agg(
+      WA.warpSlope(x, y).as("sl"), WA.warpIntercept(x, y).as("ic"),
+      WA.warpCovarSample(x, y).as("cv"),
+      count(x).cast("double").as("n"),
+      sum(x.cast(DecimalType(28, 6))).cast("double").as("sx"),
+      sum(y.cast(DecimalType(28, 6))).cast("double").as("sy"),
+      decRef(x, x).as("sxx"), decRef(x, y).as("sxy")).collect()
     rows.foreach { r =>
       val n = r.getAs[Double]("n"); val sx = r.getAs[Double]("sx")
       val sy = r.getAs[Double]("sy"); val sxx = r.getAs[Double]("sxx")
@@ -278,10 +350,33 @@ class FunctionsSpec extends SparkSpec {
     }
     // plan shape: the product moments run as a codegen'd HashAggregate
     // over primitive long buffer slots — no Decimal(37,12) sum anywhere
-    val plan = df.groupBy("g").agg(WA.warpSlope(col("x"), col("y")))
+    val plan = df.groupBy("g").agg(WA.warpSlope(x, y))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("sum_product_128"), plan.take(2000))
+    assert(plan.contains("exact_sum"), plan.take(2000))
     assert(!plan.contains("(37,12)"), plan.take(2000))
+  }
+
+  test("ratio9 gates negative numerators to 0 on both engines") {
+    // Spark's integral division truncates toward zero, DuckDB's `//`
+    // floors: ungated, -1/3 would read -0.333333332 on one engine and
+    // -0.333333333 on the other
+    import graft.pipeline.TextAnalysis
+    val cases = Seq((-1L, 3L, 0.0), (-5L, 4L, 0.0), (2L, 3L, 0.666666667))
+    val got = cases.map(c => (c._1, c._2)).toDF("n", "d").select(col("n"),
+      TextAnalysis.ratioDouble9(col("n"), col("d")),
+      TextAnalysis.ratioDecimal9(col("n"), col("d")).cast("double"))
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    cases.foreach { case (n, _, want) => assert(got(n) == ((want, want)), got) }
+    val sql = "SELECT n, " + SparkEntry.dbl9Sql("n", "d") + ", CAST(" +
+      SparkEntry.dec9Sql("n", "d") + " AS DOUBLE) FROM (VALUES " +
+      cases.map(c => s"(${c._1}, ${c._2})").mkString(", ") + ") t(n, d)"
+    val p = new ProcessBuilder("python3", "-c",
+      "import duckdb, sys\nfor r in duckdb.sql(sys.argv[1]).fetchall(): print(*r)",
+      sql).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
+    assume(p.waitFor() == 0, s"python3+duckdb unavailable: ${out.mkString(" ")}")
+    val duck = out.map(_.split(" ")).map(f => f(0).toLong -> (f(1).toDouble, f(2).toDouble)).toMap
+    assert(duck == got, out)
   }
 
   test("aggregates: all-null groups yield null medians, not index errors") {
