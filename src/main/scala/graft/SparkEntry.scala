@@ -70,6 +70,16 @@ object SparkEntry {
     s.conf.set(key, "false")
     try body finally s.conf.set(key, prev)
   }
+  /** Scoped single-use scratch directory for a stream's file-source
+    * input: `body` gets a fresh directory named after `prefix`, deleted
+    * when `body` returns or throws. What `body` returns must not read the
+    * directory — the streaming entries return a memory-sink table or a
+    * Postgres read, taken after `awaitTermination()`. */
+  private def withScratchDir[A](prefix: String)(body: String => A): A = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(d.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(d)
+  }
   /** Deterministic duplicate-pair fixture for the connected-components
     * queries: doc i ~ doc i+1 whenever both exist and i % 10 < 9 — 10-node
     * chains, reproducible in SQL (no hash seeds involved). */
@@ -3500,22 +3510,23 @@ object SparkEntry {
         .select(col("event_id"),
           pmod(col("user_id"), lit(25L)).cast("long").as("nk"),
           col("ts").cast(TimestampType).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_se").toString
-      ev.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(ev.schema).parquet(tmp)
-      val ems = unix_millis(col("ts"))
-      val out = src.join(dim,
-        col("nk") === col("n_nationkey") && col("valid_from") <= ems &&
-          (col("valid_to").isNull || col("valid_to") > ems))
-        .select(col("event_id"), col("n_name"))
-      val qname = "graft_stream_se_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy("event_id")
+      withScratchDir("graft_stream_se") { tmp =>
+        ev.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(ev.schema).parquet(tmp)
+        val ems = unix_millis(col("ts"))
+        val out = src.join(dim,
+          col("nk") === col("n_nationkey") && col("valid_from") <= ems &&
+            (col("valid_to").isNull || col("valid_to") > ems))
+          .select(col("event_id"), col("n_name"))
+        val qname = "graft_stream_se_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname).orderBy("event_id")
+      }
       }
     }),
 
@@ -3651,21 +3662,22 @@ object SparkEntry {
           .select(col("event_id").cast("long").as("event_id"),
             col("event_type").cast("string").as("event_type"),
             col("value").cast("double").as("value"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_pg").toString
-        ev.coalesce(2).write.mode("overwrite").parquet(tmp)
-        pg.resetTable(conn, tbl, ev.schema) // start-empty: re-runs must not append
-        val src = s.readStream.schema(ev.schema).parquet(tmp)
-        val q = src.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-            // epoch-ledgered staged promote: a replayed micro-batch is a
-            // no-op, so the sink is exactly-once end-to-end
-            pg.appendDistributedExactlyOnce(batch, conn, tbl, epoch)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        pg.read(s, conn, tbl, "event_id", numPartitions = 4)
-          .orderBy("event_id")
+        withScratchDir("graft_stream_pg") { tmp =>
+          ev.coalesce(2).write.mode("overwrite").parquet(tmp)
+          pg.resetTable(conn, tbl, ev.schema) // start-empty: re-runs must not append
+          val src = s.readStream.schema(ev.schema).parquet(tmp)
+          val q = src.writeStream
+            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
+              // epoch-ledgered staged promote: a replayed micro-batch is a
+              // no-op, so the sink is exactly-once end-to-end
+              pg.appendDistributedExactlyOnce(batch, conn, tbl, epoch)
+            }
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          pg.read(s, conn, tbl, "event_id", numPartitions = 4)
+            .orderBy("event_id")
+        }
       }
     }),
 
@@ -3714,19 +3726,20 @@ object SparkEntry {
         .select(col("event_id").cast("long").as("_1"),
           col("event_type").as("_2"),
           col("ts").cast(TimestampType).as("_3"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cap").toString
-      ev.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(ev.schema).parquet(tmp)
-        .as[(Long, String, java.sql.Timestamp)]
-      val out = graft.streaming.EventStream.capPerKeyStream(src, n = 500L).toDF()
-      val qname = "graft_stream_cap_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy("key", "admit_seq")
+      withScratchDir("graft_stream_cap") { tmp =>
+        ev.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(ev.schema).parquet(tmp)
+          .as[(Long, String, java.sql.Timestamp)]
+        val out = graft.streaming.EventStream.capPerKeyStream(src, n = 500L).toDF()
+        val qname = "graft_stream_cap_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname).orderBy("key", "admit_seq")
+      }
       }
     }),
 
@@ -3753,40 +3766,37 @@ object SparkEntry {
       // on a corpus-sized frame are a local-mode-only pattern (an executor
       // loss on a cluster kills the stream); the written form survives and
       // is exactly what a production deployment feeds its screen from
-      val tmpL = java.nio.file.Files.createTempDirectory("graft_stream_ndl").toString
-      graft.pipeline.Dedup.minhashLedgerMd5(hist, "text", "doc_id")
-        .write.mode("overwrite").parquet(tmpL)
-      val ledger = s.read.parquet(tmpL)
-      val fresh = docs
-        .warpFilter(col("doc_id") >= 250 && col("doc_id") < 500)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val planted = docs.warpFilter(col("doc_id") < 50)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" nearly identical content")).as("text"))
-      // LTZ event time (watermarks reject NTZ); internal only — the ts
-      // column never reaches the dumped output, so the repo-wide NTZ
-      // parquet discipline is unaffected
-      val streamIn = fresh.unionByName(planted)
-        .withColumn("ts",
-          timestamp_seconds(lit(1704067200L) + pmod(col("doc_id"), lit(600L))))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_nd").toString
-      streamIn.write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(streamIn.schema).parquet(tmp)
-      val out = graft.streaming.EventStream.nearDupScreenStreamMd5(
-        src, ledger, "text", "doc_id", "ts")
-      val qname = "graft_stream_nd_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // single-use inputs: the memory-sink table below reads neither
-      Seq(tmp, tmpL).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-      s.table(qname)
-        .select(col("doc_id").as("new_id"), col("hist_id"), col("jaccard"))
-        .orderBy("new_id", "hist_id")
+      withScratchDir("graft_stream_ndl") { tmpL => withScratchDir("graft_stream_nd") { tmp =>
+        graft.pipeline.Dedup.minhashLedgerMd5(hist, "text", "doc_id")
+          .write.mode("overwrite").parquet(tmpL)
+        val ledger = s.read.parquet(tmpL)
+        val fresh = docs
+          .warpFilter(col("doc_id") >= 250 && col("doc_id") < 500)
+          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+        val planted = docs.warpFilter(col("doc_id") < 50)
+          .select((col("doc_id") + 1000000L).as("doc_id"),
+            concat(col("text"), lit(" nearly identical content")).as("text"))
+        // LTZ event time (watermarks reject NTZ); internal only — the ts
+        // column never reaches the dumped output, so the repo-wide NTZ
+        // parquet discipline is unaffected
+        val streamIn = fresh.unionByName(planted)
+          .withColumn("ts",
+            timestamp_seconds(lit(1704067200L) + pmod(col("doc_id"), lit(600L))))
+        streamIn.write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(streamIn.schema).parquet(tmp)
+        val out = graft.streaming.EventStream.nearDupScreenStreamMd5(
+          src, ledger, "text", "doc_id", "ts")
+        val qname = "graft_stream_nd_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname)
+          .select(col("doc_id").as("new_id"), col("hist_id"), col("jaccard"))
+          .orderBy("new_id", "hist_id")
+      } }
       } }
     }),
 
@@ -3800,22 +3810,23 @@ object SparkEntry {
         .select(col("doc_id"), col("text"))
       val streamSide = docs.warpFilter(col("doc_id") % 10 =!= 7)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_ct").toString
-      streamSide.write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(streamSide.schema).parquet(tmp)
-      val out = graft.streaming.EventStream.contaminationFlagStream(
-        src, probes, "text", n = 3)
-      val qname = "graft_stream_ct_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("doc_id"), col("overlap"))
-        .filter(col("overlap") >= 1)
-        .orderBy("doc_id")
+      withScratchDir("graft_stream_ct") { tmp =>
+        streamSide.write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(streamSide.schema).parquet(tmp)
+        val out = graft.streaming.EventStream.contaminationFlagStream(
+          src, probes, "text", n = 3)
+        val qname = "graft_stream_ct_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname)
+          .select(col("doc_id"), col("overlap"))
+          .filter(col("overlap") >= 1)
+          .orderBy("doc_id")
+      }
     }),
 
     // ---- third REAL streaming driver row (r11): the watermarked
@@ -3850,25 +3861,25 @@ object SparkEntry {
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).cast(TimestampType).as("mts"))
         .agg(dsum(col("value")).as("mark_total"))
-      val tmpE = java.nio.file.Files.createTempDirectory("graft_stream_ije").toString
-      val tmpM = java.nio.file.Files.createTempDirectory("graft_stream_ijm").toString
-      ev.write.mode("overwrite").parquet(tmpE)
-      marks.write.mode("overwrite").parquet(tmpM)
-      val srcE = s.readStream.schema(ev.schema).parquet(tmpE)
-      val srcM = s.readStream.schema(marks.schema).parquet(tmpM)
-      val out = graft.streaming.EventStream.intervalJoinMarks(
-        srcE, srcM, "event_type", tolerance = "1 hour")
-      val qname = "graft_stream_ij_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("event_id"), col("mts").cast("timestamp_ntz").as("mts"),
-          col("mark_total"))
-        .orderBy("event_id", "mts")
+      withScratchDir("graft_stream_ije") { tmpE => withScratchDir("graft_stream_ijm") { tmpM =>
+        ev.write.mode("overwrite").parquet(tmpE)
+        marks.write.mode("overwrite").parquet(tmpM)
+        val srcE = s.readStream.schema(ev.schema).parquet(tmpE)
+        val srcM = s.readStream.schema(marks.schema).parquet(tmpM)
+        val out = graft.streaming.EventStream.intervalJoinMarks(
+          srcE, srcM, "event_type", tolerance = "1 hour")
+        val qname = "graft_stream_ij_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname)
+          .select(col("event_id"), col("mts").cast("timestamp_ntz").as("mts"),
+            col("mark_total"))
+          .orderBy("event_id", "mts")
+      } }
       } }
     }),
 
@@ -3919,24 +3930,25 @@ object SparkEntry {
         .withColumn("event_type", lit("__eos"))
         .withColumn("ts", timestamp_millis(lit(sentinelMs)))
         .withColumn("value", lit(0.0))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sess").toString
-      base.unionByName(sentinels).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(base.schema).parquet(tmp)
-        .as[graft.streaming.EventStream.Event]
-      val out = graft.streaming.EventStream
-        .sessionizeClosed(src, gapMs).toDF()
-        .filter(unix_millis(col("started")) < sentinelMs) // belt-and-braces
-      val qname = "graft_stream_sess_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("user_id"), unix_millis(col("started")).as("started_ms"),
-          unix_millis(col("ended")).as("ended_ms"), col("events"))
-        .orderBy("user_id", "started_ms")
+      withScratchDir("graft_stream_sess") { tmp =>
+        base.unionByName(sentinels).write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(base.schema).parquet(tmp)
+          .as[graft.streaming.EventStream.Event]
+        val out = graft.streaming.EventStream
+          .sessionizeClosed(src, gapMs).toDF()
+          .filter(unix_millis(col("started")) < sentinelMs) // belt-and-braces
+        val qname = "graft_stream_sess_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname)
+          .select(col("user_id"), unix_millis(col("started")).as("started_ms"),
+            unix_millis(col("ended")).as("ended_ms"), col("events"))
+          .orderBy("user_id", "started_ms")
+      }
       } }
     }),
 
@@ -3966,24 +3978,25 @@ object SparkEntry {
       val sentinel = Seq((0L, "__eos", 0.0)).toDF("user_id", "event_type", "value")
         .select(col("user_id"), col("event_type"),
           timestamp_millis(lit(sentinelMs)).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_tr").toString
-      base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(base.schema).parquet(tmp)
-        .as[graft.streaming.EventStream.Event]
-      val out = graft.streaming.EventStream.trendingClosed(src, winMs, k = 3)
-        .toDF()
-        .filter(unix_millis(col("window_start")) < sentinelMs)
-      val qname = "graft_stream_tr_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(unix_millis(col("window_start")).as("w_ms"), col("item"),
-          col("cnt"), col("rk"))
-        .orderBy("w_ms", "rk")
+      withScratchDir("graft_stream_tr") { tmp =>
+        base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(base.schema).parquet(tmp)
+          .as[graft.streaming.EventStream.Event]
+        val out = graft.streaming.EventStream.trendingClosed(src, winMs, k = 3)
+          .toDF()
+          .filter(unix_millis(col("window_start")) < sentinelMs)
+        val qname = "graft_stream_tr_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname)
+          .select(unix_millis(col("window_start")).as("w_ms"), col("item"),
+            col("cnt"), col("rk"))
+          .orderBy("w_ms", "rk")
+      }
       }
     }),
 
@@ -4007,25 +4020,26 @@ object SparkEntry {
       val sentinel = Seq((0L, "__eos", 0.0)).toDF("user_id", "event_type", "value")
         .select(col("user_id"), col("event_type"),
           timestamp_millis(lit(sentinelMs)).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_hg").toString
-      base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(base.schema).parquet(tmp)
-        .as[graft.streaming.EventStream.Event]
-      val out = graft.streaming.EventStream
-        .histogramClosed(src, winMs, lo = 0.0, hi = 100.0, nBins = 10)
-        .toDF()
-        .filter(unix_millis(col("window_start")) < sentinelMs)
-      val qname = "graft_stream_hg_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(unix_millis(col("window_start")).as("w_ms"), col("bin"),
-          col("cnt"), col("share"))
-        .orderBy("w_ms", "bin")
+      withScratchDir("graft_stream_hg") { tmp =>
+        base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
+        val src = s.readStream.schema(base.schema).parquet(tmp)
+          .as[graft.streaming.EventStream.Event]
+        val out = graft.streaming.EventStream
+          .histogramClosed(src, winMs, lo = 0.0, hi = 100.0, nBins = 10)
+          .toDF()
+          .filter(unix_millis(col("window_start")) < sentinelMs)
+        val qname = "graft_stream_hg_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qname)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        s.table(qname)
+          .select(unix_millis(col("window_start")).as("w_ms"), col("bin"),
+            col("cnt"), col("share"))
+          .orderBy("w_ms", "bin")
+      }
       }
     }),
 

@@ -964,19 +964,26 @@ object Dedup {
     *
     * Algorithm: alternating large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
-    * rounds, each round pure join + min-aggregate. Scale shape: no
-    * per-node adjacency lists are ever collected (the usual OOM in naive
-    * CC), the per-round state is one (u,v) edge table with 16-byte rows,
-    * and lineage is truncated every round with an eager localCheckpoint so
-    * the plan does not grow with iteration count. Skewed high-degree nodes
-    * cost one hot reduce key in the min-aggregate (partial aggregation
-    * absorbs it map-side), not a hot join bucket.
+    * rounds. Scale shape: no per-node adjacency lists are ever collected
+    * (the usual OOM in naive CC); the per-round state is one (u,v) edge
+    * table with 16-byte rows. Each star step is one `min(v) OVER
+    * (PARTITION BY u)` window — one exchange, no join — so a round is 3
+    * exchanges (two windows and the closing distinct) plus the result
+    * stage of its lineage cut: 4 jobs. The cut (eager, so the plan does
+    * not grow with iteration count) also observes the round's convergence
+    * checksum; no separate aggregate job runs. At the fixpoint the edge
+    * table is a star forest over every input node, and the labels are
+    * read from it directly.
     *
     * Returns one row per node appearing in `pairs`: `(id, cluster)` where
-    * `cluster` is the minimum node id of the component.
+    * `cluster` is the minimum node id of the component. Throws
+    * IllegalStateException when the edge set has not converged after
+    * `maxIter` rounds (a partial labeling would not be one row per node).
     */
   def connectedComponents(pairs: DataFrame, idCol1: String = "id1",
                           idCol2: String = "id2", maxIter: Int = 30): DataFrame = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.expressions.Window
     // ids may be integral (cast to long for a uniform 8-byte shuffle key)
     // or strings (UUIDs/URLs/content hashes — kept as-is, cluster = the
     // lexicographic minimum). Anything else fails loudly HERE: a blind
@@ -1003,10 +1010,6 @@ object Dedup {
     val raw = pairs
       .select(idExpr(idCol1).as("a"), idExpr(idCol2).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    // no persist: the node table is evaluated exactly once (the final
-    // labeling join) — caching it would be a pure extra materialization
-    val nodes = raw.select(col("a").as("id"))
-      .unionAll(raw.select(col("b").as("id"))).distinct()
 
     // per-round lineage cut — MANDATORY (the iterated plan would grow
     // exponentially) — but which kind is a deployment property: with a
@@ -1018,65 +1021,57 @@ object Dedup {
       if (d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint(true)
       else d.localCheckpoint(true)
 
-    // canonical direction: u (larger) -> v (smaller); invariant held by
-    // both star operations below
-    var e = cut(raw.select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      .distinct())
-
-    // convergence = identical edge set. count + order-independent
-    // xor-of-hashes is one cheap scan per round (an except().count()
-    // would cost a full join); a 64-bit collision calling a non-fixpoint
-    // "converged" is ~2^-64 and maxIter bounds the loop regardless.
-    def checksum(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    // convergence = identical edge set: count + order-independent
+    // xor-of-hashes, observed in the cut's own result stage (metrics there
+    // count only each task's successful attempt). A 64-bit collision
+    // calling a non-fixpoint "converged" is ~2^-64.
+    def cutObserved(d: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = Observation()
+      val c = cut(d.observe(obs, count(lit(1)).as("n"),
+        expr("bit_xor(xxhash64(u, v))").as("x")))
+      val m = obs.get
+      (c, (m("n").asInstanceOf[Long], Option(m("x")).fold(0L)(_.asInstanceOf[Long])))
     }
 
-    var prev = checksum(e)
+    // canonical direction: u (larger) -> v (smaller); invariant held by
+    // both star operations below
+    var (e, prev) = cutObserved(raw.select(greatest(col("a"), col("b")).as("u"),
+        least(col("a"), col("b")).as("v"))
+      .distinct())
+    val byU = Window.partitionBy("u")
     var converged = false
     var it = 0
-    while (!converged && it < maxIter) {
-      // large-star: every node links its LARGER neighbors to its local min
-      val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = und.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // NO distinct here: duplicates (two nodes linking the same (v, m))
-      // are harmless — min-aggregate dedups keys, the mins2 join cannot
-      // multiply rows (mins2 is unique per u), and small-star's final
-      // distinct restores set semantics — so skipping it saves one full
-      // shuffle of the edge set per round
-      // SHUFFLE_HASH hints (r14, guide §3.1): the per-round inputs are
-      // checkpoint scans with no size statistics — never auto-broadcast,
-      // and sort-merge would re-sort the edge-sized side every round; the
-      // per-node min tables are the classic hash build side. Join results
-      // and the min aggregates are set/order-exact, so labels are
-      // bit-identical.
-      val large = und.filter(col("v") > col("u"))
-        .join(mins.hint("SHUFFLE_HASH"), "u")
+    while (!converged) {
+      if (it == maxIter) throw new IllegalStateException(
+        s"connectedComponents did not converge within maxIter = $maxIter rounds")
+      // large-star: every node links its LARGER neighbors to the min of
+      // itself and its neighbors. NO distinct here: duplicate (v, m) edges
+      // cannot change a min, and small-star's distinct restores set
+      // semantics — skipping it saves one shuffle of the edge set per round
+      val large = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(min("v").over(byU), col("u")))
+        .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
       // small-star: all edges now point large->small; every node folds its
-      // smaller neighbors (and itself) onto their minimum
-      val mins2 = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(mins2.hint("SHUFFLE_HASH"), "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(mins2.select(col("u"), col("m").as("v")))
+      // smaller neighbors and itself onto their minimum m2. (u, m2) is never
+      // a self-loop (u > v >= m2); (v, m2) is one exactly when v = m2
+      val small = large.withColumn("m", min("v").over(byU))
+        .select(inline(array(struct(col("v").as("u"), col("m").as("v")),
+          struct(col("u"), col("m").as("v")))))
+        .filter(col("u") =!= col("v"))
         .distinct()
       val prevE = e
-      e = cut(small)
+      val (next, cur) = cutObserved(small)
       prevE.unpersist()
-      val cur = checksum(e)
+      e = next
       converged = cur == prev
       prev = cur
       it += 1
     }
-    // fixpoint: e is a star forest (child -> componentMin); roots and
-    // isolated nodes label themselves
-    val out = cut(nodes
-      .join(e.select(col("u").as("id"), col("v").as("cluster")).hint("SHUFFLE_HASH"),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster")))
+    // fixpoint: e is a star forest (child -> component min) over every
+    // input node; the roots label themselves
+    val out = cut(e.unionAll(e.select(col("v").as("u"), col("v")).distinct())
+      .select(col("u").as("id"), col("v").as("cluster")))
     e.unpersist()
     out
   }

@@ -134,12 +134,14 @@ object Preference {
     //     (anchor_id, __salt) spreads it (defaultParallelism:
     //     scale-adaptive, not a constant) — same move as
     //     Dedup.prefixJaccardCore's collision join (r14).
-    // saltFactor: 0 = derive from the cluster (defaultParallelism);
-    // 1 = salting off (one salt value — the join key degenerates to __bk);
-    // >1 = explicit. Output is salt-INVARIANT (pinned by spec): the salt
-    // only re-keys the join, never changes which pairs meet.
+    // saltFactor: 0 = derive from the cluster (defaultParallelism, capped
+    // at 64: skew relief saturates long before full cluster width, while
+    // the anchor side replicates ×S); 1 = salting off (one salt value —
+    // the join key degenerates to __bk); >1 = explicit. Output is
+    // salt-INVARIANT (pinned by spec): the salt only re-keys the join,
+    // never changes which pairs meet.
     val fanout = df.sparkSession.sparkContext.defaultParallelism
-    val nSalt = if (saltFactor > 0) saltFactor else fanout
+    val nSalt = if (saltFactor > 0) saltFactor else math.min(fanout, 64)
     val cands = df.select(col(idCol).as("neg_id"))
       .withColumn("__bk", bucket(col("neg_id")))
       .withColumn("__salt", pmod(xxhash64(col("neg_id")), lit(nSalt.toLong)))

@@ -426,7 +426,7 @@ class PipelineSpec extends SparkSpec {
     // salt-INVARIANT (r15 skew salt): the salt only re-keys the negative
     // bucket join — every (anchor, candidate) pair still meets exactly
     // once — so salting off (1) and an explicit high factor (64) must
-    // both equal the default (auto = defaultParallelism) run
+    // both equal the default (auto = min(defaultParallelism, 64)) run
     for (s <- Seq(1, 64)) {
       val salted = Preference.contrastiveTriplets(corpus, "text", "doc_id",
         0.6, 3, saltFactor = s).collect()
@@ -1551,12 +1551,34 @@ class PipelineSpec extends SparkSpec {
 
   test("connected components equal a union-find oracle on random graphs") {
     val rnd = new scala.util.Random(42)
-    for (trial <- 1 to 5) {
-      val edges = Seq.fill(5 + rnd.nextInt(30))(
-        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)).filter(e => e._1 != e._2)
+    // the shapes star contraction must fold: chains (the most rounds),
+    // stars, cliques and random edge soup, over shuffled ids so no shape
+    // arrives sorted; a trial overlays 1-3 of them on one id range, so
+    // their components merge
+    def shape(ids: IndexedSeq[Long]): Seq[(Long, Long)] = rnd.nextInt(4) match {
+      case 0 => ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      case 1 => ids.tail.map(ids.head -> _)
+      case 2 => for (a <- ids.take(12); b <- ids.take(12) if a < b) yield (a, b)
+      case _ => Seq.fill(rnd.nextInt(80))((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+    }
+    for (trial <- 1 to 20) {
+      val pool = rnd.shuffle((0L until 200L).toVector)
+      val base = Seq.fill(1 + rnd.nextInt(3))(
+        shape(rnd.shuffle(pool).take(5 + rnd.nextInt(60)))).flatten
+      // duplicate and reversed copies must not change the answer
+      val edges = (base ++ rnd.shuffle(base).take(base.size / 4).map(_.swap) ++
+        rnd.shuffle(base).take(base.size / 8)).filter(e => e._1 != e._2)
       val want = ufClusters(edges)
-      val rows = Dedup.connectedComponents(edges.toDF("id1", "id2"))
-        .as[(Long, Long)].collect()
+      val df = edges.toDF("id1", "id2")
+      // the last trial runs on string ids, zero-padded so that the
+      // lexicographic minimum is the numeric one
+      val rows =
+        if (trial < 20) Dedup.connectedComponents(df).as[(Long, Long)].collect()
+        else Dedup.connectedComponents(df.select(
+            format_string("n%04d", col("id1")).as("id1"),
+            format_string("n%04d", col("id2")).as("id2")))
+          .as[(String, String)].collect()
+          .map { case (a, b) => (a.drop(1).toLong, b.drop(1).toLong) }
       // exactly ONE row per node — toMap alone would mask duplicate or
       // conflicting labels
       assert(rows.length == want.size, s"trial $trial row count")
@@ -1571,6 +1593,54 @@ class PipelineSpec extends SparkSpec {
     val rows = Dedup.connectedComponents(edges).as[(Long, Long)].collect()
     assert(rows.length == 12)
     assert(rows.toMap == (0L to 11L).map(_ -> 0L).toMap)
+    // no pairs, empty at plan time or only at run time: no rows (the
+    // observed convergence metrics of an empty cut still arrive)
+    assert(Dedup.connectedComponents(edges.limit(0)).count() == 0)
+    assert(Dedup.connectedComponents(edges.filter(col("id1") < 0)).count() == 0)
+  }
+
+  test("connected components fail when maxIter rounds do not converge") {
+    // a partial labeling is not one row per node: out of rounds is an error
+    val edges = (0L until 11L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val err = intercept[IllegalStateException](
+      Dedup.connectedComponents(edges, maxIter = 1))
+    assert(err.getMessage.contains("maxIter = 1"))
+  }
+
+  test("connected components run 4 jobs per round and none besides") {
+    // per round: 3 shuffle-map jobs (large-star window, small-star window,
+    // closing distinct) + the eager cut's result job, which also observes
+    // the convergence checksum. Around the rounds: the initial distinct +
+    // its cut (2) and the label distinct + its cut (2). The 12-node chain
+    // takes 5 rounds (the last one confirms the fixpoint): 2 + 5 * 4 + 2.
+    val edges = (0L until 11L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val sc = spark.sparkContext
+    // count the jobs between a start and an end marker job: the listener
+    // bus is FIFO, so events of earlier tests arrive before the start
+    // marker, and every job of the call before the end marker
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counting = new java.util.concurrent.atomic.AtomicBoolean()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("cc.marker"))) match {
+          case Some("start") => counting.set(true)
+          case Some(_) => counting.set(false); done.countDown()
+          case None => if (counting.get) jobs.incrementAndGet()
+        }
+    }
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty("cc.marker", tag)
+      try sc.parallelize(Seq(1)).count() finally sc.setLocalProperty("cc.marker", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      Dedup.connectedComponents(edges) // eager: every cut runs inside the call
+      marker("end")
+      assert(done.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 24, s"${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("connected components use the RELIABLE checkpoint when a dir is configured") {
